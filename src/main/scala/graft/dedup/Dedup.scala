@@ -139,8 +139,12 @@ object MinHash {
   }
 
   /** Distinct values of `xs`, ascending — the array form of toSet for
-    * [[jaccardSorted]] (sorted in place; input array is owned). */
-  def distinctSorted(xs: Array[Long]): Array[Long] = {
+    * [[jaccardSorted]]. Leaves `xs` untouched. */
+  def distinctSorted(xs: Array[Long]): Array[Long] = distinctSortedInPlace(xs.clone())
+
+  /** [[distinctSorted]] that sorts `xs` in place: for arrays the caller
+    * owns, such as a fresh [[shingles]] result. */
+  private def distinctSortedInPlace(xs: Array[Long]): Array[Long] = {
     if (xs.length <= 1) return xs
     java.util.Arrays.sort(xs)
     var n = 1
@@ -262,7 +266,7 @@ object MinHash {
     // joins stay plain shuffle joins on id (broadcast-unsafe at scale).
     val shs = df.select(col(idCol).cast("string").as("id"), col(textCol).cast("string").as("text"))
       .as[(String, String)]
-      .mapPartitions(_.map { case (id, t) => (id, distinctSorted(shingles(t))) })
+      .mapPartitions(_.map { case (id, t) => (id, distinctSortedInPlace(shingles(t))) })
       .toDF("id", "sh")
     val verified = pairs
       .join(shs.select($"id".as("id_a"), $"sh".as("sh_a")), "id_a")

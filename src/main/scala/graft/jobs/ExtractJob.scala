@@ -23,10 +23,11 @@ import org.apache.spark.sql.functions._
   *             → plus the retry set: urls whose latest attempt err'd
   *               (the reference retries failed files every run,
   *               convert_to_embeddings.py:552-558)
-  *             → repartition by url                      (salting, P5)
+  *             → repartitionById on a bucket-aligned id  (salting, P5)
   *             → mapPartitions extract                   (X1/X2)
   *             → flatMap chunk                           (K1-K5, D1)
-  *             → write chunks partitioned by bucket + err ledger rows
+  *             → write chunks partitioned by bucket
+  *             → lineage/metrics aggregate, then err ledger rows (if any)
   *             → commit manifest with lineage + metrics
   *
   * Read semantics (latest-wins per bucket): a bucket's live chunk files are
@@ -149,14 +150,13 @@ object ExtractJob {
     // Stays a DataFrame end-to-end — the retry set is bounded only by how
     // many urls err'd, and a poisoned corpus (systematic parse bug at 100 TB)
     // must not OOM the driver through a collect(). Only its COUNT crosses to
-    // the driver (a scalar), used for planning and the broadcast-size check.
-    val retrySet: DataFrame =
-      if (!retryErrs || lake.currentVersion == 0)
-        spark.emptyDataset[String].toDF("url")
-      else pendingErrs(spark, tableRoot)
-        .filter(!col("bucket").isin(todo: _*))
-        .select("url").distinct()
-    val nRetry: Long = retrySet.count()
+    // the driver (a scalar), used for planning and the broadcast-size check;
+    // a cold table (or retryErrs = false) has no retry set and skips that job.
+    lazy val retrySet: DataFrame = pendingErrs(spark, tableRoot)
+      .filter(!col("bucket").isin(todo: _*))
+      .select("url").distinct()
+    val nRetry: Long =
+      if (retryErrs && lake.currentVersion > 0) retrySet.count() else 0L
 
     if (todo.isEmpty && nRetry == 0)
       return Result(lake.currentVersion, 0, 0, 0, Nil, 0)
@@ -183,116 +183,133 @@ object ExtractJob {
             .withColumn("retry", lit(true)))
       }
 
-    // salted repartition: decouple extraction parallelism from input layout
+    // salted, bucket-aligned repartition: decouple extraction parallelism
+    // from input layout while keeping each bucket on as few tasks as
+    // possible, so the partitionBy("bucket") write below creates at most
+    // nBuckets + P - 1 chunk files instead of about nBuckets × P. The id is
+    // (bucket·P + s) div nBuckets with s = pmod(murmur3(url), P), an url
+    // salt independent of the xxhash64 bucket: for P <= nBuckets each task
+    // owns whole buckets (exactly nBuckets / P of them when P divides
+    // nBuckets); for P > nBuckets each bucket is salted over about
+    // ⌈P / nBuckets⌉ tasks. repartitionById uses the id as is; repartition(n,
+    // id) would re-hash it and leave ~1/e of the partitions empty.
     val parts = spark.sparkContext.defaultParallelism
+    val pid = expr(
+      s"(cast(bucket as bigint) * $parts + pmod(hash(url), $parts)) div $nBuckets").cast("int")
     val salted = work
-      .repartition(parts, col("url"))
+      .repartitionById(parts, pid)
       .as[(String, Array[Byte], Int, Boolean)]
 
     // Extraction feeds two consumers (chunk write + lineage/metrics agg);
     // persist so the expensive parse runs once. At production scale the
     // equivalent is materializing the extracted-docs table itself as a
-    // snapshot and deriving chunks/lineage from that scan.
+    // snapshot and deriving chunks/lineage from that scan. Released on every
+    // exit, so a failed write or commit does not leave it in the caller's
+    // block manager.
     val extracted: Dataset[(ExtractedDoc, Int, Boolean)] = salted.mapPartitions { it =>
       it.map { case (url, html, bucket, retry) => (Extract.extractOne(url, html), bucket, retry) }
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val v = lake.currentVersion + 1
+      val outBase = s"$tableRoot/data/v$v"
 
-    val v = lake.currentVersion + 1
-    val outBase = s"$tableRoot/data/v$v"
+      // chunk rows, partitioned by bucket so per-bucket supersession is a
+      // pure file-path property; chunk count observed on the same write pass
+      // (no re-read of the just-written table)
+      val chunkObs = new org.apache.spark.sql.Observation(s"chunks_v$v")
+      val chunks = extracted.flatMap { case (d, bucket, _) =>
+        if (d.err.isEmpty && d.text.nonEmpty)
+          Chunker.chunkDocument(d.url, graft.Hashing.sha256Hex(d.text), d.text)
+            .map(c => (c.id, c.url, c.chunk_index, c.total_chunks, c.text, c.chunk_hash,
+              c.is_duplicate, c.duplicate_of_index,
+              math.max(1, c.text.length / 4).toLong, bucket))
+        else Nil
+      }.toDF("id", "url", "chunk_index", "total_chunks", "text", "chunk_hash",
+        "is_duplicate", "duplicate_of_index", "tokens", "bucket")
+        .observe(chunkObs, count(lit(1)).as("n"))
+      chunks.write.partitionBy("bucket").mode("overwrite").parquet(s"$outBase/chunks")
+      val nChunks: Long = chunkObs.get("n") match {
+        case l: java.lang.Long => l.longValue()
+        case other => other.toString.toLong
+      }
 
-    // chunk rows, partitioned by bucket so per-bucket supersession is a
-    // pure file-path property; chunk count observed on the same write pass
-    // (no re-read of the just-written table)
-    val chunkObs = new org.apache.spark.sql.Observation(s"chunks_v$v")
-    val chunks = extracted.flatMap { case (d, bucket, _) =>
-      if (d.err.isEmpty && d.text.nonEmpty)
-        Chunker.chunkDocument(d.url, graft.Hashing.sha256Hex(d.text), d.text)
-          .map(c => (c.id, c.url, c.chunk_index, c.total_chunks, c.text, c.chunk_hash,
-            c.is_duplicate, c.duplicate_of_index,
-            math.max(1, c.text.length / 4).toLong, bucket))
-      else Nil
-    }.toDF("id", "url", "chunk_index", "total_chunks", "text", "chunk_hash",
-      "is_duplicate", "duplicate_of_index", "tokens", "bucket")
-      .observe(chunkObs, count(lit(1)).as("n"))
-    chunks.write.partitionBy("bucket").mode("overwrite").parquet(s"$outBase/chunks")
-    val nChunks: Long = chunkObs.get("n") match {
-      case l: java.lang.Long => l.longValue()
-      case other => other.toString.toLong
-    }
+      // per-document billing breakdown (the reference's per-file tokens/cost
+      // ledger, billing.py:53-72): tokens = Σ_chunks max(1, len/4), cost at
+      // the reference's default price. Derived from the persisted extraction
+      // (chunking re-runs on the cached docs — billing is not the hot path).
+      // `v` is written as a DATA column (not derived from the manifest at read
+      // time): ledger readers then open every live file in ONE parquet
+      // relation instead of building one scan node per version — at 10^4
+      // commits the per-version union made every planning read carry
+      // thousands of scan nodes.
+      val billing = chunks
+        .groupBy("bucket", "url")
+        .agg(sum("tokens").as("tokens"), count(lit(1)).as("n_chunks"))
+        .withColumn("cost", col("tokens").cast("double") / 1000000.0 * Billing.PricePerMTokens)
+        .withColumn("v", lit(v))
+      billing.write.mode("overwrite").parquet(s"$outBase/billing")
 
-    // per-document billing breakdown (the reference's per-file tokens/cost
-    // ledger, billing.py:53-72): tokens = Σ_chunks max(1, len/4), cost at
-    // the reference's default price. Derived from the persisted extraction
-    // (chunking re-runs on the cached docs — billing is not the hot path).
-    // `v` is written as a DATA column (not derived from the manifest at read
-    // time): ledger readers then open every live file in ONE parquet
-    // relation instead of building one scan node per version — at 10^4
-    // commits the per-version union made every planning read carry
-    // thousands of scan nodes.
-    val billing = chunks
-      .groupBy("bucket", "url")
-      .agg(sum("tokens").as("tokens"), count(lit(1)).as("n_chunks"))
-      .withColumn("cost", col("tokens").cast("double") / 1000000.0 * Billing.PricePerMTokens)
-      .withColumn("v", lit(v))
-    billing.write.mode("overwrite").parquet(s"$outBase/billing")
+      // per-bucket lineage (the reference's per-file ledger rows,
+      // progress_store.py:33-61) + an observe() metric on the same pass —
+      // the Catalyst-native billing accumulator (SURVEY.md §2.7 A1,
+      // reference: billing.py:53-72): collected by the listener during the
+      // lineage aggregation, no extra job
+      val observation = new org.apache.spark.sql.Observation(s"extract_v$v")
+      val docStats = extracted
+        .map { case (d, b, _) => (b, d.url, if (d.err.nonEmpty) 1 else 0, d.n_chars.toLong) }
+        .toDF("bucket", "url", "is_err", "n_chars")
+        .observe(observation,
+          count(lit(1)).as("obs_docs"),
+          sum("is_err").as("obs_errs"),
+          sum(ceil(col("n_chars") / 4)).as("obs_tokens_est"))
+      val lineageRows = docStats.groupBy("bucket")
+        .agg(count(lit(1)).as("n_docs"), sum("is_err").as("n_err"),
+          min("url").as("url_lo"), max("url").as("url_hi"), sum("n_chars").as("chars"))
+        .collect()
+        .map { r =>
+          Map(
+            "bucket" -> r.getAs[Int]("bucket").toString,
+            "n_docs" -> r.getAs[Long]("n_docs").toString,
+            "n_err" -> r.getAs[Long]("n_err").toString,
+            "url_lo" -> r.getAs[String]("url_lo"),
+            "url_hi" -> r.getAs[String]("url_hi"),
+            "chars" -> r.getAs[Long]("chars").toString)
+        }.toSeq
 
-    // error ledger: failures always; retry attempts always (err = "" marks a
-    // retry that succeeded, retiring the url from the pending set)
-    val errRows = extracted
-      .filter(t => t._1.err.nonEmpty || t._3)
-      .map { case (d, b, _) => (b, d.url, d.kind, d.err) }
-      .toDF("bucket", "url", "kind", "err")
-      .withColumn("v", lit(v))
-    errRows.write.mode("overwrite").parquet(s"$outBase/errs")
+      val nDocs = lineageRows.map(_("n_docs").toLong).sum
+      val nErrs = lineageRows.map(_("n_err").toLong).sum
 
-    // per-bucket lineage (the reference's per-file ledger rows,
-    // progress_store.py:33-61) + an observe() metric on the same pass —
-    // the Catalyst-native billing accumulator (SURVEY.md §2.7 A1,
-    // reference: billing.py:53-72): collected by the listener during the
-    // lineage aggregation, no extra job
-    val observation = new org.apache.spark.sql.Observation(s"extract_v$v")
-    val docStats = extracted
-      .map { case (d, b, _) => (b, d.url, if (d.err.nonEmpty) 1 else 0, d.n_chars.toLong) }
-      .toDF("bucket", "url", "is_err", "n_chars")
-      .observe(observation,
-        count(lit(1)).as("obs_docs"),
-        sum("is_err").as("obs_errs"),
-        sum(ceil(col("n_chars") / 4)).as("obs_tokens_est"))
-    val lineageRows = docStats.groupBy("bucket")
-      .agg(count(lit(1)).as("n_docs"), sum("is_err").as("n_err"),
-        min("url").as("url_lo"), max("url").as("url_hi"), sum("n_chars").as("chars"))
-      .collect()
-      .map { r =>
-        Map(
-          "bucket" -> r.getAs[Int]("bucket").toString,
-          "n_docs" -> r.getAs[Long]("n_docs").toString,
-          "n_err" -> r.getAs[Long]("n_err").toString,
-          "url_lo" -> r.getAs[String]("url_lo"),
-          "url_hi" -> r.getAs[String]("url_hi"),
-          "chars" -> r.getAs[Long]("chars").toString)
-      }.toSeq
+      // error ledger: failures always; retry attempts always (err = "" marks a
+      // retry that succeeded, retiring the url from the pending set). A run
+      // with neither writes no errs files: the ledger readers open only
+      // manifest-listed files, so an absent directory adds no rows.
+      if (nErrs > 0 || nRetry > 0)
+        extracted
+          .filter(t => t._1.err.nonEmpty || t._3)
+          .map { case (d, b, _) => (b, d.url, d.kind, d.err) }
+          .toDF("bucket", "url", "kind", "err")
+          .withColumn("v", lit(v))
+          .write.mode("overwrite").parquet(s"$outBase/errs")
 
-    val nDocs = lineageRows.map(_("n_docs").toLong).sum
-    val nErrs = lineageRows.map(_("n_err").toLong).sum
-    val files = lake.listParquet(outBase)
-    // token estimate from observe(): the reference's billing tokens
-    // (max(1, len//4), convert_to_embeddings.py:106-118), free-riding on the
-    // lineage aggregation job
-    val obs = observation.get
-    val tokensEst: Double = obs.get("obs_tokens_est") match {
-      case Some(l: java.lang.Long) => l.toDouble
-      case Some(d: java.lang.Double) => d.toDouble
-      case _ => 0.0
-    }
-    // commit ALL planned buckets under their new fingerprint (some may be
-    // empty of rows — still done); retry-only work is marked with its own key
-    val keys = todo.map(b => s"b=$b:fp=${fps.getOrElse(b, 0L)}") ++
-      (if (nRetry > 0) Seq(s"retry-v$v") else Nil)
-    lake.commit(files, keys, lineageRows,
-      Map("docs" -> nDocs.toDouble, "chunks" -> nChunks.toDouble,
-          "errs" -> nErrs.toDouble, "tokens_est" -> tokensEst))
-    extracted.unpersist()
-    Result(v, nDocs, nChunks, nErrs, todo, nRetry)
+      val files = lake.listParquet(outBase)
+      // token estimate from observe(): the reference's billing tokens
+      // (max(1, len//4), convert_to_embeddings.py:106-118), free-riding on the
+      // lineage aggregation job
+      val obs = observation.get
+      val tokensEst: Double = obs.get("obs_tokens_est") match {
+        case Some(l: java.lang.Long) => l.toDouble
+        case Some(d: java.lang.Double) => d.toDouble
+        case _ => 0.0
+      }
+      // commit ALL planned buckets under their new fingerprint (some may be
+      // empty of rows — still done); retry-only work is marked with its own key
+      val keys = todo.map(b => s"b=$b:fp=${fps.getOrElse(b, 0L)}") ++
+        (if (nRetry > 0) Seq(s"retry-v$v") else Nil)
+      lake.commit(files, keys, lineageRows,
+        Map("docs" -> nDocs.toDouble, "chunks" -> nChunks.toDouble,
+            "errs" -> nErrs.toDouble, "tokens_est" -> tokensEst))
+      Result(v, nDocs, nChunks, nErrs, todo, nRetry)
+    } finally extracted.unpersist()
   }
 
   /** Live chunk files per the latest-wins-per-bucket rule, resolved from

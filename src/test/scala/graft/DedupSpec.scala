@@ -106,6 +106,15 @@ class DedupSpec extends SparkSuiteBase {
     assert(MinHash.distinctSorted(Array(3L, 1L, 3L, 2L, 1L)).toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("distinctSorted leaves the caller's array untouched") {
+    val in = Array(3L, 1L, 3L, 2L, 1L)
+    assert(MinHash.distinctSorted(in).toSeq == Seq(1L, 2L, 3L))
+    assert(in.toSeq == Seq(3L, 1L, 3L, 2L, 1L))
+    val distinct = Array(5L, 4L)
+    assert(MinHash.distinctSorted(distinct).toSeq == Seq(4L, 5L))
+    assert(distinct.toSeq == Seq(5L, 4L))
+  }
+
   test("repetition ratios: closed-form corner cases") {
     import graft.text.TextAnalysis.repetitionRatios
     assert(repetitionRatios("") == ((0.0, 0.0, 0.0)))

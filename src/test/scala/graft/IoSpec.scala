@@ -21,10 +21,13 @@ class IoSpec extends SparkSuiteBase {
     chunks.write.json(jsonDir)
     val back = spark.read.json(jsonDir)
     assert(back.count() == chunks.count())
-    // value-level equality after normalizing column order + row order
-    val a = chunks.orderBy("id").collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq
+    // value-level equality after normalizing column order + row order; exact
+    // duplicate pages share chunk ids, so the row order needs (id, url,
+    // chunk_index) to be total
+    val a = chunks.orderBy("id", "url", "chunk_index")
+      .collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq
     val cols = chunks.columns
-    val b = back.select(cols.map(col): _*).orderBy("id")
+    val b = back.select(cols.map(col): _*).orderBy("id", "url", "chunk_index")
       .collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq
     assert(a == b)
 

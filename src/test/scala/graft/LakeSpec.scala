@@ -119,13 +119,14 @@ class LakeSpec extends SparkSuiteBase {
     assert(r3.buckets.isEmpty && r3.docs == 0)
   }
 
+  private def page(u: String, body: Array[Byte]) =
+    PageRow(u, new java.sql.Timestamp(1000L), body, "", "en")
+  private def goodHtml(i: Int) = graft.corpus.HtmlGen.article(s"T$i",
+    Seq(s"a sufficiently long paragraph body number $i with plenty of words to pass the strict tier filter easily"),
+    1, Nil).getBytes("UTF-8")
+  private val poison = Array[Byte](0, -1, 7, 9, 12, 0, 3) // NUL prefix: unsniffable
+
   test("failed row is retried next run; recovery shows up without re-extracting its bucket") {
-    import java.sql.Timestamp
-    def page(u: String, body: Array[Byte]) = PageRow(u, new Timestamp(1000L), body, "", "en")
-    def goodHtml(i: Int) = graft.corpus.HtmlGen.article(s"T$i",
-      Seq(s"a sufficiently long paragraph body number $i with plenty of words to pass the strict tier filter easily"),
-      1, Nil).getBytes("UTF-8")
-    val poison = Array[Byte](0, -1, 7, 9, 12, 0, 3) // NUL prefix: unsniffable
     val root = tmpDir()
 
     val run1Pages = spark.createDataset(
@@ -157,6 +158,44 @@ class LakeSpec extends SparkSuiteBase {
     // run 4: fully quiesced
     val r4 = ExtractJob.run(spark, run3Pages, root, nBuckets = 4)
     assert(r4.buckets.isEmpty && r4.retried == 0 && r4.version == r3.version)
+  }
+
+  test("err ledger: a clean run writes no errs files; a failure and its recovery still resolve") {
+    val poisonUrl = "https://t.example/poison"
+    val good = (0 until 10).map(i => page(s"https://t.example/p$i", goodHtml(i)))
+    val root = tmpDir()
+    def errFiles(v: Int) = new LakeTable(root).readManifest(v).files.filter(_.contains("/errs/"))
+    def ledger() = ExtractJob.errLedger(spark, root)
+      .select("url", "err", "v").as[(String, String, Int)].collect().toSet
+    def pending() = ExtractJob.pendingErrs(spark, root)
+      .select("url", "err").as[(String, String)].collect().toSet
+
+    // clean run: nothing failed, nothing retried — no errs files, empty ledger
+    val r1 = ExtractJob.run(spark, spark.createDataset(good), root, nBuckets = 4)
+    assert(r1.errs == 0 && r1.retried == 0)
+    assert(errFiles(1).isEmpty)
+    assert(ledger().isEmpty && pending().isEmpty)
+
+    // a new, failing page: its bucket re-extracts and records the failure
+    val r2 = ExtractJob.run(spark,
+      spark.createDataset(good :+ page(poisonUrl, poison)),
+      root, nBuckets = 4)
+    assert(r2.errs == 1 && r2.buckets.size == 1)
+    assert(errFiles(2).nonEmpty)
+    assert(pending() == Set((poisonUrl, "unsniffable")))
+    assert(ledger() == Set((poisonUrl, "unsniffable", 2)))
+
+    // content fixed in place (same url and warc_ts): the retry recovers it
+    val fixed = spark.createDataset(good :+ page(poisonUrl, goodHtml(99)))
+    val r3 = ExtractJob.run(spark, fixed, root, nBuckets = 4)
+    assert(r3.buckets.isEmpty && r3.retried == 1 && r3.errs == 0)
+    assert(errFiles(3).nonEmpty)
+    assert(pending().isEmpty)
+    assert(ledger() == Set((poisonUrl, "unsniffable", 2), (poisonUrl, "", 3)))
+    assert(ExtractJob.readChunks(spark, root).filter(col("url") === poisonUrl).count() == 1)
+
+    // quiesced: no work, no new version
+    assert(ExtractJob.run(spark, fixed, root, nBuckets = 4).version == r3.version)
   }
 
   test("lineage rows cover all processed buckets with doc counts") {
