@@ -29,36 +29,8 @@ import graft.chunk.Chunker
   */
 object Bench {
 
-  private def newSession(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      // size scan splits so the binary-heavy pages scan parallelizes to the
-      // core count instead of packing into a handful of 128MB splits
-      // (SURVEY.md §4 / prompt: "size spark.sql.files.maxPartitionBytes so
-      // partitions fit and parallelize at the target SF")
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      .config("spark.sql.files.openCostInBytes", s"${1024 * 1024}")
-      // shuffle spill dir on tmpfs: the salting exchange must not measure
-      // this VM's ext4 — on a real cluster shuffle lands on local NVMe
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      // zstd shuffle blocks: fewer bytes through the shared memory subsystem
-      // per shuffled page (A/B'd vs lz4 in tools/DiagBench — faster and more
-      // stable on this box; also the common production choice)
-      .config("spark.io.compression.codec", "zstd")
-      // execution memory off-heap: stage profiling (tools/StageProf) showed
-      // on-heap sort/shuffle buffers turning young GC into 28-46% of task
-      // time at local[32]; off-heap removes them from the GC heap entirely
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "16g")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private def newSession(cores: Int): SparkSession =
+    SparkSessions(s"graft-bench-$cores", Some(cores), SparkSessions.tuned)
 
   /** Materialize the deterministic corpus once (unmeasured): the measured
     * job is extraction over a parquet pages table — the north-rule shape —
@@ -85,7 +57,7 @@ object Bench {
     org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType)))
 
-  private[graft] def pipeline(spark: SparkSession, dir: String, parts: Int): (Long, Long) = {
+  private def pipeline(spark: SparkSession, dir: String, parts: Int): (Long, Long) = {
     import spark.implicits._
     // explicit schema: no footer-inference job inflating fixed overhead
     val pages = spark.read.schema(pageSchema).parquet(dir).as[PageRow]
@@ -143,7 +115,7 @@ object Bench {
 
   /** Host capacity ratio 8→32 = (wall8·8)/(wall32·32) over fixed total
     * spin work (1.0 = the box gives 32 threads 4× the cycles of 8). */
-  private[graft] def hostSpinEff(): Double = {
+  private def hostSpinEff(): Double = {
     val total = 12_000_000_000L
     val w8 = spinWall(8, total / 8)
     val w32 = spinWall(32, total / 32)
@@ -154,7 +126,7 @@ object Bench {
     * buffer (far beyond LLC) — GB/s of effectively available DRAM read
     * bandwidth. Co-tenant memory pressure shows here when the register-spin
     * probe reads clean. */
-  private[graft] def hostMemBandwidthGBs(): Double = {
+  private def hostMemBandwidthGBs(): Double = {
     val n = 32 * 1024 * 1024 // 256 MB of longs
     val a = new Array[Long](n)
     var i = 0
@@ -214,18 +186,18 @@ object Bench {
   }
 
   /** Record a probe-qualified 8→32 pair if it beats the stored capability
-    * (shared with tools/CapabilityRun, which exploits calm windows without
-    * paying for a full bench). */
-  private[graft] def recordCapability(t8: Double, t32: Double, eff: Double,
-                                      memGBs: Double, spinEff: Double, docs: Long): Unit = {
+    * (best wins, so a pair measured in a calm window survives later runs
+    * in dirty weather). */
+  private def recordCapability(t8: Double, t32: Double, eff: Double,
+                               memGBs: Double, spinEff: Double, docs: Long): Unit = {
     if (readCapability().forall(_.eff < eff))
       writeCapability(Capability(t8, t32, eff, memGBs, spinEff,
         System.currentTimeMillis(), docs), CapabilityPath)
   }
 
   /** Same, for the OFFICIAL 2→8 pair (keys t2_sec/t8_sec). */
-  private[graft] def recordCapability28(t2: Double, t8: Double, eff: Double,
-                                        memGBs: Double, spinEff: Double, docs: Long): Unit = {
+  private def recordCapability28(t2: Double, t8: Double, eff: Double,
+                                 memGBs: Double, spinEff: Double, docs: Long): Unit = {
     if (readCapability(Capability28Path, "t2_sec", "t8_sec").forall(_.eff < eff))
       writeCapability(Capability(t2, t8, eff, memGBs, spinEff,
         System.currentTimeMillis(), docs), Capability28Path, "t2_sec", "t8_sec")

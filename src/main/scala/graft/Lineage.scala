@@ -1,6 +1,8 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Shared lineage plumbing for ITERATIVE operators (Components, KCore,
   * HyperBall, …): each round `localCheckpoint`s to truncate the
@@ -10,10 +12,12 @@ object Lineage {
 
   /** Unpersist the materialized RDD blocks behind a localCheckpoint'd
     * Dataset (safe only once nothing will read it again — its lineage is
-    * truncated, so the blocks cannot be recomputed). */
+    * truncated, so the blocks cannot be recomputed). Only `df`'s own root
+    * is released: a Dataset derived from a checkpoint releases nothing,
+    * so the checkpoints it reads stay registered for their other readers. */
   def dropCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
+    try df.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ => ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 }

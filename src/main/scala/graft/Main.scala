@@ -36,15 +36,10 @@ object Main {
     require(args.nonEmpty, usage)
     // spark-submit supplies spark.master as a system property; absent that
     // (plain `sbt runMain`), default to local mode as the scaladoc promises
-    val builder = SparkSession.builder()
-      .appName(s"graft-${args.head}")
-      .config("spark.sql.session.timeZone", "UTC")
-    if (!sys.props.contains("spark.master") && !sys.env.contains("MASTER"))
-      builder.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val local = !sys.props.contains("spark.master") && !sys.env.contains("MASTER")
+    val spark = SparkSessions(s"graft-${args.head}",
+      Option.when(local)(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt),
+      logLevel = "WARN")
     try run(spark, args.toList)
     finally spark.stop()
   }

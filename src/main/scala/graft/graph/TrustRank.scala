@@ -54,11 +54,7 @@ object TrustRank {
       tagged.schema.head.dataType == org.apache.spark.sql.types.LongType
     if (longIds && ed.count() <= driverEdgeLimit && tagged.count() <= driverEdgeLimit)
       return driverLoop(ed, tagged, iters, base, teleport, dampNum, dampDen)
-    // the initial ranks are their OWN checkpoint so the per-round
-    // dropCheckpoint(prev) never reaches through to `tagged`'s blocks
-    // (tagged is re-read every round)
     var r = tagged.select(col("id"), (col("s") * base).as("rank"))
-      .localCheckpoint()
     for (_ <- 1 to iters) {
       val contrib = ed.join(r, ed("src") === r("id"))
         .select(col("dst").as("id"),
@@ -73,9 +69,10 @@ object TrustRank {
       graft.Lineage.dropCheckpoint(prev)
     }
     // the loop's working relations are done; the returned ranks are their
-    // own materialized checkpoint (the Components precedent)
+    // own materialized checkpoint (the Components precedent), unless no
+    // round ran and they are still a projection of `tagged`
     graft.Lineage.dropCheckpoint(ed)
-    graft.Lineage.dropCheckpoint(tagged)
+    if (iters > 0) graft.Lineage.dropCheckpoint(tagged)
     r
   }
 

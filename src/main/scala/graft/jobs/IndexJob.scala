@@ -83,6 +83,17 @@ object IndexJob {
       .filter(col("__graft_rn") === 1)
       .drop("__graft_rn")
       .localCheckpoint()
+    // every reader of the checkpoint is a write in commitSegment; release
+    // its blocks once the segment is committed (or the build failed)
+    try commitSegment(spark, docs, indexRoot, facetCols, positions, blocks)
+    finally graft.Lineage.dropCheckpoint(docs)
+  }
+
+  /** Write the deduped segment relation `docs` (doc, text, facets...) as
+    * the next segment's channels and commit it; returns its version. */
+  private def commitSegment(spark: SparkSession, docs: DataFrame, indexRoot: String,
+                            facetCols: Seq[String], positions: Boolean,
+                            blocks: Boolean): Int = {
     val idx = Bm25.build(docs, "doc", "text")
     val lake = new LakeTable(indexRoot)
     val v = lake.currentVersion + 1

@@ -49,7 +49,7 @@ object PipelineJob {
                           tombstoned: Long = 0, appended: Long = 0)
 
   def run(spark: SparkSession, pages: Dataset[PageRow], root: String,
-          nBuckets: Int = 16, jaccardThreshold: Double = 0.8): Result = {
+          nBuckets: Int, jaccardThreshold: Double): Result = {
     spark.sparkContext.setJobDescription("pipeline:extract")
     val er = ExtractJob.run(spark, pages, s"$root/extract", nBuckets)
     spark.sparkContext.setJobDescription(null)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Ad-hoc plan audit for one SparkEntry query: executes it (AQE final
@@ -11,10 +10,7 @@ object Audit {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: Audit <query> [sfDir]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkSessions("graft-audit", Some(4))
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     df.collect()
     val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))

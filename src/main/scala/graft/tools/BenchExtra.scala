@@ -22,25 +22,10 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object BenchExtra {
 
-  private def newSession(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-benchextra-$cores")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.get("BENCHEXTRA_SHUFFLE").map(_.toInt).getOrElse(cores))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      .config("spark.sql.files.openCostInBytes", s"${1024 * 1024}")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "16g")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private def newSession(cores: Int): SparkSession =
+    graft.SparkSessions(s"graft-benchextra-$cores", Some(cores),
+      graft.SparkSessions.tuned ++ sys.env.get("BENCHEXTRA_SHUFFLE")
+        .map(n => "spark.sql.shuffle.partitions" -> n.toInt.toString))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -35,10 +35,7 @@ object GenFixtures {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("src/test/resources/golden")
     Files.createDirectories(Paths.get(outDir))
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkSessions("graft-genfixtures", Some(8))
     import spark.implicits._
     implicit val s: SparkSession = spark
 

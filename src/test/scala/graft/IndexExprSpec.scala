@@ -19,8 +19,11 @@ class IndexExprSpec extends SparkSuiteBase {
     val pages = spark.range(150).map(i => PageGen.row(42L, i))
     ExtractJob.run(spark, pages, root, nBuckets = 4)
     val chunks = ExtractJob.readChunks(spark, root)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val v = IndexJob.build(spark, chunks, idxRoot)
     assert(v == 1)
+    // the build's checkpoint of the deduped segment is released on return
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- persisted == Set.empty)
     val m = new LakeTable(idxRoot).readManifest(1)
     assert(m.metrics("n_docs") > 0 && m.metrics("avgdl") > 0)
 

@@ -12,15 +12,5 @@ trait SparkSuiteBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSuiteBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = SparkSessions("graft-test", Some(4))
 }

@@ -19,6 +19,9 @@ class TrustRankSpec extends SparkSuiteBase {
   test("zero iterations: seeds hold base mass, everyone else zero") {
     assert(run(Seq(1L -> 2L), Seq(1L, 2L, 3L), Seq(1L), 0) ==
       Map(1L -> B, 2L -> 0L, 3L -> 0L))
+    assert(TrustRank.run(Seq(1L -> 2L).toDF("src", "dst"), Seq(1L, 2L, 3L).toDF("id"),
+        Seq(1L).toDF("id"), 0, driverEdgeLimit = 0L)
+      .as[(Long, Long)].collect().toMap == Map(1L -> B, 2L -> 0L, 3L -> 0L))
   }
 
   test("hand-computed chain: trust decays by 0.85 per hop") {
